@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Waits until Spark's listener bus has delivered every posted event. The
+  * bus is package-private, hence this file's package. */
+object BusDrain {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

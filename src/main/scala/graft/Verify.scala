@@ -24,12 +24,8 @@ object Verify {
         // compare silently pass on old data — remove it (recursively: a
         // mid-write failure leaves _temporary/ subtrees) so the failure
         // is visible as a missing result
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          if (!f.delete() && f.exists())
-            System.err.println(s"[verify] could not remove stale ${f.getPath}")
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        Fixtures.deleteRecursively(new java.io.File(s"$outDir/$name"))
+          .foreach(f => System.err.println(s"[verify] could not remove stale ${f.getPath}"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

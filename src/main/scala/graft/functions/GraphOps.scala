@@ -414,10 +414,7 @@ object GraphOps {
     // initialPartitionNum — at toy scale hundreds of near-empty tasks per
     // round dominate wall time (the q113 pageRank lesson, same fix). The
     // count also materializes the first checkpoint.
-    val tc0 = System.nanoTime()
     val parts = math.max(1, (e.count() / (1L << 16)).toInt)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] construct: ${(System.nanoTime() - tc0) / 1e9}%.2f s")
     // The fixpoint test must see edge-set EQUALITY, not just a stable
     // count — star rounds can rewire while preserving cardinality. Two
     // order-independent fingerprints (count + endpoint-hash XOR; XOR is
@@ -434,7 +431,6 @@ object GraphOps {
     var r = 0
     var converged = false
     while (r < maxRounds && !converged) {
-      val tr0 = System.nanoTime()
       // large-star: m(v) = min(N(v) ∪ {v}); emit (u, m(v)) for u > v.
       // NO dedup here — duplicate edges cannot change the min-aggregates
       // of the small-star that consumes this, so the mid-round distinct
@@ -461,7 +457,6 @@ object GraphOps {
         ns.join(smin, "v").select(col("u").as("a"), col("m").as("b"))
           .union(smin.select(col("v").as("a"), col("m").as("b"))))
       val next = small.coalesce(parts).localCheckpoint(false)
-      val t0 = System.nanoTime()
       val cur = probe(next) // materializes `next` (and transitively `large`)
       // Once `next`'s checkpoint blocks exist they are self-contained —
       // the previous round's edge frame and this round's large-star frame
@@ -476,8 +471,6 @@ object GraphOps {
       converged = cur == prev
       prev = cur
       r += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $r: edges=${cur._1} probe=${(System.nanoTime() - t0) / 1e9}%.2f s full=${(System.nanoTime() - tr0) / 1e9}%.2f s")
     }
     // A non-converged exit would hand downstream consumers (including
     // absorbComponents, which ASSUMES a star forest) labels that are
@@ -495,7 +488,6 @@ object GraphOps {
     // `canon` keeps a = least endpoint, and a star forest's every edge
     // touches the root, which is the component minimum. Labels are the
     // b side; the roots label themselves (each appears only as an a).
-    val tl0 = System.nanoTime()
     // Eager-checkpoint the labels so the final star-forest frame can be
     // released too: after this the call holds exactly ONE pinned RDD (the
     // node-sized result), no matter how many rounds ran — asserted by
@@ -505,8 +497,6 @@ object GraphOps {
         .select(col("a").as("id"), col("a").as("component")))
       .localCheckpoint(true)
     releaseLocalCheckpoint(e)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] labels force: ${(System.nanoTime() - tl0) / 1e9}%.2f s")
     labels
   }
 

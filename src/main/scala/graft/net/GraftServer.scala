@@ -224,11 +224,19 @@ final class GraftServer(val graph: IncrementalGraph, requestedPort: Int = 0) {
 
   /** Stream rows off the cluster with the same bounded, loud hand-off as
     * the streaming listen path; entries use the tagged encoding with nulls
-    * omitted (the reference's sparse entries). */
+    * omitted (the reference's sparse entries).
+    *
+    * The frame is limited to one row past the cap before it is iterated:
+    * a root limit plans as CollectLimit (unsorted frames) or
+    * TakeOrderedAndProject (the ascending range results), both of which
+    * funnel every partition through one single-partition exchange, so a
+    * frame renders in ONE Spark job. A bare `toLocalIterator` runs one
+    * job per partition, and materialized tables gain a partition per
+    * insert. */
   private def entriesOf(df: DataFrame): Seq[String] = {
     val schema = df.schema
     val limit = maxResultRows
-    val it = df.toLocalIterator()
+    val it = df.limit(if (limit == Int.MaxValue) limit else limit + 1).toLocalIterator()
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     while (it.hasNext) {
       buf += TaggedJson.toTaggedJson(it.next(), schema)

@@ -7,12 +7,12 @@ import graft.operators.{ActionRegistry, GraftAction, IncrementalGraph}
 import java.io.{DataInputStream, DataOutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
 
 /** End-to-end protocol tests against the reference's own artifacts: the
-  * pipeline is reactive_db/test_cfg.yaml, the legacy frames are
-  * reactive_db/test_requests.txt replayed byte-for-byte, and the listen
-  * cascade is the reactivedb_rust_client usage_example.rs flow. */
+  * pipeline is reactive_db/test_cfg.yaml, the legacy frames are a vendored
+  * copy of reactive_db/test_requests.txt (the `test_requests.txt` test
+  * resource) replayed byte-for-byte, and the listen cascade is the
+  * reactivedb_rust_client usage_example.rs flow. */
 class GraftServerSpec extends SparkSpec {
   private val mapper = new ObjectMapper()
   private val NilUuid = "00000000-0000-0000-0000-000000000000"
@@ -95,7 +95,11 @@ class GraftServerSpec extends SparkSpec {
       // file framing: [1-byte length][payload], frames separated by \n\n —
       // extract the payloads untouched and send them over the real 4-byte
       // BE wire framing (client_connection.rs:56-76)
-      val bytes = Files.readAllBytes(Paths.get("/root/reference/reactive_db/test_requests.txt"))
+      val bytes = {
+        val in = getClass.getResourceAsStream("/test_requests.txt")
+        assert(in != null, "test resource test_requests.txt missing")
+        try in.readAllBytes() finally in.close()
+      }
       val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
       var i = 0
       while (i < bytes.length) {
@@ -236,6 +240,45 @@ class GraftServerSpec extends SparkSpec {
       // the connection and server still work
       c.send("""{"GetAll":{"table":"grades","column":"name","key":{"Str":"x"}}}""")
       assert(response(c.recv()).get("ManyResults").get("Ok").size() == 0)
+    } finally { c.close(); server.close() }
+  }
+
+  private def insertGrade(c: WireClient, name: String, grade: Int): Unit = {
+    c.send(s"""{"InsertData":{"table":"grades","entry":{"name":{"Str":"$name"},"grade":{"Integer":$grade}}}}""")
+    assert(response(c.recv()).get("ManyResults").has("Ok"))
+  }
+
+  test("a result over maxResultRows answers Err; the server keeps serving") {
+    val server = newServer()
+    val c = new WireClient(server.port)
+    try {
+      Seq("a" -> 1, "b" -> 2, "c" -> 3).foreach { case (n, g) => insertGrade(c, n, g) }
+      server.maxResultRows = 2
+      c.send("""{"GreaterThan":{"table":"grades","column":"grade","key":{"Integer":0}}}""")
+      val e = response(c.recv()).get("ManyResults").get("Err")
+      assert(e != null && e.asText().contains("maxResultRows=2"), s"expected a cap error, got $e")
+      // exactly at the cap still answers
+      c.send("""{"GreaterThan":{"table":"grades","column":"grade","key":{"Integer":2}}}""")
+      val ok = response(c.recv()).get("ManyResults").get("Ok")
+      assert(ok.size() == 2)
+      c.send("""{"FindOne":{"table":"grades","column":"name","key":{"Str":"b"}}}""")
+      assert(response(c.recv()).get("OneResult").get("Ok").get("grade").get("Integer").asLong() == 2L)
+    } finally { c.close(); server.close() }
+  }
+
+  test("LessThan over a many-partition table stays ascending") {
+    val server = newServer()
+    val c = new WireClient(server.port)
+    try {
+      // descending arrival: every insert appends a partition, so the
+      // ascending answer has to come from the sort, not arrival order
+      val grades = (12 to 1 by -1).map(_ * 7 % 13)
+      grades.zipWithIndex.foreach { case (g, i) => insertGrade(c, s"n$i", g) }
+      assert(server.graph.table("grades").rdd.getNumPartitions > 1)
+      c.send("""{"LessThan":{"table":"grades","column":"grade","key":{"Integer":100}}}""")
+      val lt = response(c.recv()).get("ManyResults").get("Ok")
+      val got = (0 until lt.size()).map(i => lt.get(i).get("grade").get("Integer").asLong())
+      assert(got == grades.sorted.map(_.toLong))
     } finally { c.close(); server.close() }
   }
 
